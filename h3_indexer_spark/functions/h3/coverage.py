@@ -445,6 +445,74 @@ def polyfill_many(specs, res: int) -> list:
     return results
 
 
+def polygon_cover_many(outer_rings, res: int, wrap=None) -> list:
+    """Point-in-polygon candidate covers for a batch of rows, as sorted
+    per-row lists of cells. ``outer_rings[i]`` holds row i's outer
+    (lng, lat) rings, closure optional (an empty list — a null, empty
+    or non-areal row — covers nothing); ``wrap[i]`` is True when row
+    i's coordinates sit in the [0, 360) antimeridian frame (see
+    polyfill_many). Holes are not taken: a cell whose center sits in
+    a hole can still overlap kept area, so the exact test settles
+    holes instead.
+
+    Each part's cover is its boundary walk (line_cells' 0.75-edge
+    sampling) expanded by one ring — corner-cut cells the sampling
+    skips are adjacent to a sampled one — unioned with the polyfill
+    of the ring. The whole batch runs as one pass: one
+    latlng_to_cell_batch over every boundary sample, one
+    cell_neighbors_batch over the distinct boundary cells and one
+    polyfill_many over every part, so the cost no longer scales with
+    per-cell Python calls."""
+    import numpy as np
+
+    from h3_indexer_spark.functions.h3.vectorized import (
+        latlng_to_cell_batch,
+    )
+
+    if wrap is None:
+        wrap = [False] * len(outer_rings)
+    part_row, part_ring, lat_parts, lng_parts = [], [], [], []
+    for row, rings in enumerate(outer_rings):
+        for ring in rings:
+            ring = list(ring)
+            if ring and ring[0] == ring[-1]:
+                ring = ring[:-1]
+            if not ring:
+                continue
+            la, ln = line_sample_points(ring + [ring[0]], res)
+            part_row.append(row)
+            part_ring.append(ring)
+            lat_parts.append(la)
+            lng_parts.append(ln)
+    if not part_ring:
+        return [[] for _ in outer_rings]
+
+    samples = latlng_to_cell_batch(
+        np.concatenate(lat_parts), np.concatenate(lng_parts), res
+    )
+    bounds = np.cumsum([0] + [len(la) for la in lat_parts])
+    boundaries = []
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        b = np.unique(samples[lo:hi])
+        boundaries.append(b[b != 0])
+
+    uniq = np.unique(np.concatenate(boundaries))
+    halo = cell_neighbors_batch(uniq)
+    specs = []
+    for row, ring, b in zip(part_row, part_ring, boundaries):
+        expanded = np.unique(
+            np.concatenate([b, halo[np.searchsorted(uniq, b)].ravel()])
+        )
+        specs.append(
+            (ring, None, expanded[expanded != 0].tolist(), bool(wrap[row]))
+        )
+
+    per_row: list = [[] for _ in outer_rings]
+    for row, fill in zip(part_row, polyfill_many(specs, res)):
+        per_row[row].extend(fill)
+    return [sorted(set(cells)) for cells in per_row]
+
+
 def _points_in_ring_v(lng, lat, ring):
     """Vector twin of _point_in_ring (same even-odd arithmetic)."""
     import numpy as np

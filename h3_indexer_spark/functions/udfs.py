@@ -73,10 +73,21 @@ def _cell_wkt(cell: int) -> str:
 # --- scalar pandas UDFs (U2/U3 parity surface) ----------------------------
 
 
-@F.pandas_udf(StringType())
-def h3_to_wkt_udf(h3_index: pd.Series) -> pd.Series:
-    """U3 parity (reference spark_udfs.py:48-67): hex cell boundary as
-    a WKT polygon."""
+def seeded_pandas_udf(return_type, body):
+    """Scalar pandas UDF running ``body`` after installing the derived
+    H3 tables, pickled here in the Spark driver (~10 KB in the closure): a
+    fresh Python worker then skips the ~2.6 s per-process derivation
+    its first H3 kernel call would otherwise pay."""
+    blob = core.export_derived_blob()
+
+    def run(*cols: pd.Series) -> pd.Series:
+        core.seed_derived_blob(blob)
+        return body(*cols)
+
+    return F.pandas_udf(run, return_type)
+
+
+def _h3_to_wkt(h3_index: pd.Series) -> pd.Series:
     return h3_index.map(
         lambda s: _cell_wkt(core.string_to_h3(s)) if s else None
     )
@@ -89,19 +100,13 @@ def _cell_wkb(cell: int) -> bytes:
     return geometry.to_wkb("polygon", [ring])
 
 
-@F.pandas_udf(BinaryType())
-def h3_to_wkb_udf(h3_index: pd.Series) -> pd.Series:
-    """U4 parity (reference spark_udfs.py:24-45): hex cell boundary as
-    a WKB polygon (little-endian 2D)."""
+def _h3_to_wkb(h3_index: pd.Series) -> pd.Series:
     return h3_index.map(
         lambda s: _cell_wkb(core.string_to_h3(s)) if s else None
     )
 
 
-@F.pandas_udf(DoubleType())
-def h3_area_km2_udf(h3_index: pd.Series) -> pd.Series:
-    """Spheroid cell area (reference geospatial.py:128-135 used
-    ST_AreaSpheroid over the hex geometry). Vectorized batch compute."""
+def _h3_area_km2(h3_index: pd.Series) -> pd.Series:
     mask = h3_index.notna()
     out = pd.Series([None] * len(h3_index), dtype="float64")
     if mask.any():
@@ -110,9 +115,26 @@ def h3_area_km2_udf(h3_index: pd.Series) -> pd.Series:
     return out
 
 
+def make_h3_to_wkt_udf():
+    """U3 parity (reference spark_udfs.py:48-67): hex cell boundary as
+    a WKT polygon."""
+    return seeded_pandas_udf(StringType(), _h3_to_wkt)
+
+
+def make_h3_to_wkb_udf():
+    """U4 parity (reference spark_udfs.py:24-45): hex cell boundary as
+    a WKB polygon (little-endian 2D)."""
+    return seeded_pandas_udf(BinaryType(), _h3_to_wkb)
+
+
+def make_h3_area_km2_udf():
+    """Spheroid cell area (reference geospatial.py:128-135 used
+    ST_AreaSpheroid over the hex geometry). Vectorized batch compute."""
+    return seeded_pandas_udf(DoubleType(), _h3_area_km2)
+
+
 def make_latlng_to_cell_udf(res: int):
-    @F.pandas_udf(StringType())
-    def latlng_to_cell_udf(lat: pd.Series, lng: pd.Series) -> pd.Series:
+    def latlng_to_cell(lat: pd.Series, lng: pd.Series) -> pd.Series:
         from h3_indexer_spark.functions.h3.vectorized import (
             latlng_to_cell_batch,
         )
@@ -128,7 +150,7 @@ def make_latlng_to_cell_udf(res: int):
             out[mask] = [core.h3_to_string(int(c)) for c in cells]
         return out
 
-    return latlng_to_cell_udf
+    return seeded_pandas_udf(StringType(), latlng_to_cell)
 
 
 @F.pandas_udf(StringType())

@@ -93,22 +93,15 @@ def haversine_km(
 
 
 def _cell_udf(res: int):
-    from h3_indexer_spark.functions.h3 import core
+    from h3_indexer_spark.functions.udfs import seeded_pandas_udf
 
-    # driver-derived H3 tables ride the closure (~10 KB) so fresh
-    # workers skip the ~2.6 s per-process derivation
-    blob = core.export_derived_blob()
-
-    @F.pandas_udf("long")
     def to_cell(lat: pd.Series, lng: pd.Series) -> pd.Series:
         import numpy as np
 
-        from h3_indexer_spark.functions.h3 import core as wcore
         from h3_indexer_spark.functions.h3.vectorized import (
             latlng_to_cell_batch,
         )
 
-        wcore.seed_derived_blob(blob)
         cells = latlng_to_cell_batch(
             lat.to_numpy(dtype="float64"),
             lng.to_numpy(dtype="float64"),
@@ -124,19 +117,15 @@ def _cell_udf(res: int):
     # pattern). Marking it non-deterministic forbids the duplication;
     # the only pushdown lost is past this projection, which sits
     # directly on the fixture select.
-    return to_cell.asNondeterministic()
+    return seeded_pandas_udf("long", to_cell).asNondeterministic()
 
 
 def _cell_with_neighbors_udf(res: int, k: int = 1):
-    from h3_indexer_spark.functions.h3 import core
+    from h3_indexer_spark.functions.udfs import seeded_pandas_udf
 
-    blob = core.export_derived_blob()
-
-    @F.pandas_udf("array<long>")
     def to_cells(lat: pd.Series, lng: pd.Series) -> pd.Series:
         import numpy as np
 
-        from h3_indexer_spark.functions.h3 import core as wcore
         from h3_indexer_spark.functions.h3.coverage import (
             cell_disk_batch,
         )
@@ -144,7 +133,6 @@ def _cell_with_neighbors_udf(res: int, k: int = 1):
             latlng_to_cell_batch,
         )
 
-        wcore.seed_derived_blob(blob)
         cells = np.asarray(
             latlng_to_cell_batch(
                 lat.to_numpy(dtype="float64"),
@@ -168,7 +156,7 @@ def _cell_with_neighbors_udf(res: int, k: int = 1):
             else []
         )
 
-    return to_cells
+    return seeded_pandas_udf("array<long>", to_cells)
 
 
 def h3_radius_join(
@@ -247,6 +235,80 @@ def h3_self_radius_join(
     return out.where(F.col(lid) < F.col(rid))
 
 
+def _polygon_parts(value) -> tuple[list, bool]:
+    """(rings of every POLYGON part, wrap) of any geometry encoding —
+    MULTIPOLYGON / GEOMETRYCOLLECTION via parse_any_parts. Non-areal
+    parts (points, lines) contribute no area and are skipped: a
+    documented empty cover, not an error; so are null and
+    unparseable values. A feature crossing the antimeridian (the
+    Index stage's rule, udfs._maybe_unwrap) comes back shifted into
+    the [0, 360) frame with ``wrap`` True."""
+    from h3_indexer_spark.functions.geometry import parse_any_parts
+    from h3_indexer_spark.functions.udfs import _maybe_unwrap
+
+    try:
+        parts = parse_any_parts(value)
+    except Exception:
+        return [], False
+    parts, wrap = _maybe_unwrap(parts)
+    return [
+        rings for kind, rings in parts if kind.upper() == "POLYGON" and rings
+    ], wrap
+
+
+def _cover_udf(res: int):
+    from h3_indexer_spark.functions.udfs import seeded_pandas_udf
+
+    def cover(wkts: pd.Series) -> pd.Series:
+        from h3_indexer_spark.functions.h3.coverage import (
+            polygon_cover_many,
+        )
+
+        parsed = [_polygon_parts(w) for w in wkts]
+        return pd.Series(
+            polygon_cover_many(
+                [[rings[0] for rings in polys] for polys, _ in parsed],
+                res,
+                wrap=[wrap for _, wrap in parsed],
+            )
+        )
+
+    return seeded_pandas_udf("array<long>", cover)
+
+
+def _pip_udf():
+    @F.pandas_udf("boolean")
+    def pip(lat: pd.Series, lng: pd.Series, wkts: pd.Series) -> pd.Series:
+        import numpy as np
+
+        from h3_indexer_spark.functions.h3.coverage import (
+            _points_in_ring_v,
+        )
+
+        la = lat.to_numpy(dtype="float64")
+        ln = lng.to_numpy(dtype="float64")
+        res_mask = np.zeros(len(la), dtype=bool)
+        wk = wkts.to_numpy(dtype=object)
+        for w in pd.unique(wk):
+            if w is None:
+                continue
+            polys, wrap = _polygon_parts(w)
+            m = wk == w
+            x = ln[m]
+            if wrap:
+                x = np.where(x < 0.0, x + 360.0, x)
+            any_inside = np.zeros(int(m.sum()), dtype=bool)
+            for rings in polys:
+                inside = _points_in_ring_v(x, la[m], rings[0])
+                for hole in rings[1:]:
+                    inside &= ~_points_in_ring_v(x, la[m], hole)
+                any_inside |= inside
+            res_mask[m] = any_inside
+        return pd.Series(res_mask)
+
+    return pip
+
+
 def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
@@ -273,6 +335,19 @@ def point_in_polygon_join(
     per polygon) against candidate selectivity (coarser = more false
     candidates per cell for the exact test).
 
+    The cover is ONE batched pass per Arrow batch
+    (coverage.polygon_cover_many): every outer ring's boundary
+    samples index in one call, the 1-ring halo of the distinct
+    boundary cells comes from one neighbor-kernel call, and every
+    part fills in one polyfill_many call — the same batched kernels
+    the Index stage runs. Holes are left to the exact test.
+
+    Antimeridian: a polygon with a consecutive-vertex longitude jump
+    over 180° crosses ±180° (the Index stage's RFC 7946 §3.1.9 rule,
+    udfs._maybe_unwrap). Both halves of the join then work in the
+    [0, 360) frame: the cover fills the shifted rings, and the exact
+    test shifts candidate point longitudes below 0 by +360.
+
     Scale shape — the cover exchange carries NO geometry: the polygon
     side explodes to bare ``(poly_id, cell)`` pairs (16 bytes/row),
     candidates equi-join on the cell, and only the surviving
@@ -283,8 +358,8 @@ def point_in_polygon_join(
     10⁴-vertex multipolygon with a 10³-cell cover ships ~16 KB of
     cover keys instead of ~100 MB of repeated WKT — the shuffled
     bytes no longer multiply cover size by geometry size. The exact
-    test stays a worker-local vectorized ray-cast with the parsed
-    rings memoized per polygon — holes honored (even-odd).
+    test stays a worker-local vectorized ray-cast, each distinct
+    polygon of a batch parsed once — holes honored (even-odd).
 
     ``poly_id`` must UNIQUELY identify a polygon row: the geometry
     re-attaches by that key after the cell join, so duplicate ids
@@ -293,104 +368,6 @@ def point_in_polygon_join(
     which the cover and the exact test both handle)."""
     pid, plat, plng = point_cols
     gid, gwkt = poly_cols
-
-    from h3_indexer_spark.functions.geometry import parse_any_parts
-    from h3_indexer_spark.functions.h3 import core as _core
-    from h3_indexer_spark.functions.h3.coverage import polyfill
-
-    _tables_blob = _core.export_derived_blob()
-
-    def _polygon_parts(value):
-        """POLYGON parts of any geometry (handles MULTIPOLYGON /
-        GEOMETRYCOLLECTION via parse_any_parts); non-areal parts
-        (points, lines) contribute no area and are skipped —
-        documented empty-cover behavior, not an error."""
-        try:
-            parts = parse_any_parts(value)
-        except Exception:
-            return []
-        return [
-            rings
-            for kind, rings in parts
-            if kind.upper() == "POLYGON" and rings
-        ]
-
-    @F.pandas_udf("array<long>")
-    def cover(wkts: pd.Series) -> pd.Series:
-        from h3_indexer_spark.functions.h3 import core as wcore
-        from h3_indexer_spark.functions.h3.coverage import (
-            cell_neighbors,
-            line_cells,
-        )
-
-        wcore.seed_derived_blob(_tables_blob)
-        out = []
-        for w in wkts:
-            if w is None:
-                out.append([])
-                continue
-            # cover each part's OUTER ring only: covering with holes
-            # would drop cells whose CENTER sits in a hole even when
-            # they still overlap kept area — losing candidates near
-            # hole edges. Holes are honored by the exact test instead.
-            #
-            # The boundary traversal is EXPANDED by one ring before
-            # the union: line_cells' 0.75-edge sampling documents that
-            # corner-cut cells may be skipped and "callers complete
-            # coverage with a 1-ring expansion" — the Index pipeline
-            # does (udfs._expand_with_neighbors); skipping it here
-            # dropped a point whose cell the polygon's top edge
-            # clipped but whose center sat outside (caught by the
-            # sf0.1 oracle sweep: one inside-point in 1.2M lost).
-            # The halo's extra candidates are settled by the exact
-            # ray-cast; cover grows by ≤6 cells per boundary cell.
-            cells: dict[int, None] = {}
-            for rings in _polygon_parts(w):
-                ring = list(rings[0])
-                if ring and ring[0] == ring[-1]:
-                    ring = ring[:-1]
-                if not ring:
-                    continue
-                boundary = line_cells(ring + [ring[0]], res)
-                expanded: dict[int, None] = {}
-                for c in boundary:
-                    expanded[int(c)] = None
-                    for nb in cell_neighbors(c):
-                        expanded[int(nb)] = None
-                for c in polyfill(
-                    rings[0], res, boundary_cells=list(expanded)
-                ):
-                    cells[int(c)] = None
-            out.append(list(cells))
-        return pd.Series(out)
-
-    @F.pandas_udf("boolean")
-    def pip(lat: pd.Series, lng: pd.Series, wkts: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from h3_indexer_spark.functions.h3.coverage import (
-            _points_in_ring_v,
-        )
-
-        la = lat.to_numpy(dtype="float64")
-        ln = lng.to_numpy(dtype="float64")
-        res_mask = np.zeros(len(la), dtype=bool)
-        parts_cache: dict[str, list] = {}
-        wk = wkts.to_numpy(dtype=object)
-        for w in pd.unique(wk):
-            if w is None:
-                continue
-            if w not in parts_cache:
-                parts_cache[w] = _polygon_parts(w)
-            m = wk == w
-            any_inside = np.zeros(int(m.sum()), dtype=bool)
-            for rings in parts_cache[w]:
-                inside = _points_in_ring_v(ln[m], la[m], rings[0])
-                for hole in rings[1:]:
-                    inside &= ~_points_in_ring_v(ln[m], la[m], hole)
-                any_inside |= inside
-            res_mask[m] = any_inside
-        return pd.Series(res_mask)
 
     pt = points.select(
         F.col(pid).alias(f"pt_{pid}"),
@@ -403,7 +380,7 @@ def point_in_polygon_join(
     # cover_cells x WKT_size when it did)
     pg = polygons.select(
         F.col(gid).alias(f"pg_{gid}"),
-        F.explode(cover(F.col(gwkt))).alias("_cell"),
+        F.explode(_cover_udf(res)(F.col(gwkt))).alias("_cell"),
     )
     cand = pt.join(pg, "_cell").drop("_cell")
     geoms = polygons.select(
@@ -412,7 +389,7 @@ def point_in_polygon_join(
     if broadcast_geoms:
         geoms = F.broadcast(geoms)
     cand = cand.join(geoms, f"pg_{gid}").where(
-        pip(F.col("_p_lat"), F.col("_p_lng"), F.col("_wkt"))
+        _pip_udf()(F.col("_p_lat"), F.col("_p_lng"), F.col("_wkt"))
     )
     matched = cand.select(
         f"pt_{pid}",

@@ -194,11 +194,15 @@ def hex_smooth(
     partial-sum map-side, so the shuffle carries at most 7 rows per
     input cell collapsing to one row per distinct cell. DECIMAL-exact
     sums keep the mean bit-deterministic."""
+    from h3_indexer_spark.functions.h3 import core
     from h3_indexer_spark.functions.h3.coverage import cell_neighbors_batch
 
     import numpy as np
 
+    blob = core.export_derived_blob()
+
     def fan_out(batches):
+        core.seed_derived_blob(blob)
         for pdf in batches:
             cells = np.asarray(
                 [int(s, 16) for s in pdf[cell_col]], dtype=np.int64

@@ -35,7 +35,7 @@ from h3_indexer_spark.constants import (
     SUM_PREFIX,
 )
 from h3_indexer_spark.functions.h3.sql import parent_expr
-from h3_indexer_spark.functions.udfs import h3_area_km2_udf
+from h3_indexer_spark.functions.udfs import make_h3_area_km2_udf
 from h3_indexer_spark.operators.relational import (
     full_outer_align,
     group_and_sum,
@@ -71,7 +71,7 @@ def _finalize(resolved: DataFrame, h3_resolution: int) -> DataFrame:
     return (
         resolved.withColumn(H3_RESOLUTION, F.lit(h3_resolution))
         .withColumn(H3_R3_PARENT, parent_expr(H3_INDEX, 3))
-        .withColumn(H3_AREA_KM2, h3_area_km2_udf(F.col(H3_INDEX)))
+        .withColumn(H3_AREA_KM2, make_h3_area_km2_udf()(F.col(H3_INDEX)))
         .select(H3_INDEX, H3_RESOLUTION, H3_R3_PARENT, H3_AREA_KM2, *sum_cols)
     )
 

@@ -298,16 +298,16 @@ class TestWkbWriter:
         """The WKB cell boundary decodes to the same ring the WKT UDF
         prints (reference spark_udfs.py:24-45 vs :48-67)."""
         from h3_indexer_spark.functions.udfs import (
-            h3_to_wkb_udf,
-            h3_to_wkt_udf,
+            make_h3_to_wkb_udf,
+            make_h3_to_wkt_udf,
         )
 
         df = spark.createDataFrame(
             [("8828308281fffff",), ("85283473fffffff",)], "h3_index string"
         ).select(
             "h3_index",
-            h3_to_wkt_udf("h3_index").alias("wkt"),
-            h3_to_wkb_udf("h3_index").alias("wkb"),
+            make_h3_to_wkt_udf()("h3_index").alias("wkt"),
+            make_h3_to_wkb_udf()("h3_index").alias("wkb"),
         )
         for r in df.collect():
             kind, rings = geometry.parse_wkb(bytes(r.wkb))
