@@ -36,7 +36,6 @@ from h3_indexer_spark.config.loader import (
 )
 from h3_indexer_spark.plans.indexer import h3_indexer_spark, index_job
 from h3_indexer_spark.plans.resolver import (
-    h3_resolver_single_input_spark,
     h3_resolver_spark,
     resolve_job,
 )
@@ -58,7 +57,6 @@ __all__ = [
     "VectorTable",
     "get_spark_session",
     "h3_indexer_spark",
-    "h3_resolver_single_input_spark",
     "h3_resolver_spark",
     "index_job",
     "job_from_dict",

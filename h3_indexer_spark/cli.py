@@ -80,6 +80,15 @@ def run(argv: list[str] | None = None) -> int:
         else job_from_json(args.json_input)
     )
     spark = get_spark_session(job.h3_resolution, app_name=f"h3idx-{job.name}")
+    try:
+        return _run_stages(args, job, spark)
+    finally:
+        job.release()
+
+
+def _run_stages(args: argparse.Namespace, job, spark) -> int:
+    """Validate → Index → Resolve with the writes the mode asks for;
+    returns the exit code."""
     validate_config(job, spark)
     log.info("job %s validated (%d inputs)", job.id, len(job.inputs))
     if args.validate_only:

@@ -119,6 +119,18 @@ class Job:
         self.h3_resolved_df = df
         return self
 
+    def release(self) -> "Job":
+        """Unpersist every frame the stages cached for this job (each
+        input's validated and indexed frames, the resolved frame), so
+        a session that runs many jobs keeps none of them behind."""
+        frames = [self.h3_resolved_df]
+        for vt in self.inputs.values():
+            frames += [vt.df, vt.h3_indexed_df]
+        for df in frames:
+            if df is not None:
+                df.unpersist()
+        return self
+
     @property
     def vector_inputs(self) -> dict[str, VectorTable]:
         return dict(self.inputs)

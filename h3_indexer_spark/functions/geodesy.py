@@ -93,73 +93,6 @@ def _norm(a):
     return math.sqrt(_dot(a, a))
 
 
-def vincenty_distance_m(
-    lat1: float, lng1: float, lat2: float, lng2: float
-) -> float:
-    """Geodesic distance (meters) between two degree points on WGS84 —
-    Vincenty's inverse formula with a haversine fallback for the rare
-    non-converging near-antipodal case."""
-    if lat1 == lat2 and lng1 == lng2:
-        return 0.0
-    L = math.radians(lng2 - lng1)
-    u1 = math.atan((1.0 - _F) * math.tan(math.radians(lat1)))
-    u2 = math.atan((1.0 - _F) * math.tan(math.radians(lat2)))
-    sin_u1, cos_u1 = math.sin(u1), math.cos(u1)
-    sin_u2, cos_u2 = math.sin(u2), math.cos(u2)
-    lam = L
-    for _ in range(200):
-        sin_lam, cos_lam = math.sin(lam), math.cos(lam)
-        sin_sigma = math.sqrt(
-            (cos_u2 * sin_lam) ** 2
-            + (cos_u1 * sin_u2 - sin_u1 * cos_u2 * cos_lam) ** 2
-        )
-        if sin_sigma == 0.0:
-            return 0.0
-        cos_sigma = sin_u1 * sin_u2 + cos_u1 * cos_u2 * cos_lam
-        sigma = math.atan2(sin_sigma, cos_sigma)
-        sin_alpha = cos_u1 * cos_u2 * sin_lam / sin_sigma
-        cos_sq_alpha = 1.0 - sin_alpha * sin_alpha
-        if cos_sq_alpha == 0.0:
-            cos_2sm = 0.0  # equatorial line
-        else:
-            cos_2sm = cos_sigma - 2.0 * sin_u1 * sin_u2 / cos_sq_alpha
-        C = _F / 16.0 * cos_sq_alpha * (4.0 + _F * (4.0 - 3.0 * cos_sq_alpha))
-        lam_prev = lam
-        lam = L + (1.0 - C) * _F * sin_alpha * (
-            sigma
-            + C
-            * sin_sigma
-            * (cos_2sm + C * cos_sigma * (-1.0 + 2.0 * cos_2sm * cos_2sm))
-        )
-        if abs(lam - lam_prev) < 1e-12:
-            break
-    else:
-        return haversine_distance_m(lat1, lng1, lat2, lng2)
-    u_sq = cos_sq_alpha * (_A * _A - _B * _B) / (_B * _B)
-    A_coef = 1.0 + u_sq / 16384.0 * (
-        4096.0 + u_sq * (-768.0 + u_sq * (320.0 - 175.0 * u_sq))
-    )
-    B_coef = u_sq / 1024.0 * (256.0 + u_sq * (-128.0 + u_sq * (74.0 - 47.0 * u_sq)))
-    delta_sigma = (
-        B_coef
-        * sin_sigma
-        * (
-            cos_2sm
-            + B_coef
-            / 4.0
-            * (
-                cos_sigma * (-1.0 + 2.0 * cos_2sm * cos_2sm)
-                - B_coef
-                / 6.0
-                * cos_2sm
-                * (-3.0 + 4.0 * sin_sigma * sin_sigma)
-                * (-3.0 + 4.0 * cos_2sm * cos_2sm)
-            )
-        )
-    )
-    return _B * A_coef * (sigma - delta_sigma)
-
-
 def haversine_distance_m(
     lat1: float, lng1: float, lat2: float, lng2: float
 ) -> float:
@@ -173,25 +106,7 @@ def haversine_distance_m(
     return 2.0 * AUTHALIC_RADIUS_M * math.asin(min(1.0, math.sqrt(h)))
 
 
-def spheroid_line_length_m(coords: list[tuple[float, float]]) -> float:
-    """Geodesic length of a polyline of (lng, lat) degree pairs
-    (G7, ST_LengthSpheroid parity)."""
-    total = 0.0
-    for (x1, y1), (x2, y2) in zip(coords, coords[1:]):
-        total += vincenty_distance_m(y1, x1, y2, x2)
-    return total
-
-
 # --- planar (degree-space) metrics: G5/G6 parity --------------------------
-
-
-def planar_line_length(coords: list[tuple[float, float]]) -> float:
-    """Euclidean length in degree space — the reference's PCT_LENGTH
-    ratio metric (ST_Length on lon/lat geometries is planar)."""
-    return sum(
-        math.hypot(x2 - x1, y2 - y1)
-        for (x1, y1), (x2, y2) in zip(coords, coords[1:])
-    )
 
 
 def planar_polygon_area(coords: list[tuple[float, float]]) -> float:
@@ -215,10 +130,11 @@ def planar_polygon_area(coords: list[tuple[float, float]]) -> float:
 
 
 def vincenty_distance_m_batch(lat1, lng1, lat2, lng2):
-    """Vector twin of vincenty_distance_m for degree arrays: lockstep
-    masked iteration; rows that never converge (near-antipodal) fall
-    back to haversine. Agrees with the scalar to sub-micrometer (the
-    final evaluation uses the converged lambda, the scalar the
+    """Geodesic distances (meters) on WGS84 for degree arrays:
+    Vincenty's inverse formula in lockstep masked iteration; rows that
+    never converge (near-antipodal) fall back to haversine. Agrees with
+    the scalar formulation in tests/scalar_oracle.py to sub-micrometer
+    (the final evaluation uses the converged lambda, the scalar the
     second-to-last — they differ by < 1e-12 rad)."""
     import numpy as np
 

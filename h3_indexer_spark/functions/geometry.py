@@ -5,11 +5,12 @@ constants.py:8); WKB-hex and GeoJSON inputs are converted on ingest
 (reference utils/geospatial.py:18-114 sniffs the encoding from the
 first row — we do the same per-value, which is strictly more robust).
 
-Clipping: H3 hexagons are convex, so feature∩hex reduces to
-line×convex-polygon (parametric Cyrus-Beck walk) and
-polygon×convex-polygon (Sutherland-Hodgman) — no general overlay
-machinery needed (the reference leaned on JTS overlay-ng for
-robustness, spark/spark.py:104-107).
+Clipping lives in ``functions/h3/clipbatch.py``: H3 hexagons are
+convex, so feature∩hex reduces to line×convex-polygon (parametric
+Cyrus-Beck) and polygon×convex-polygon (Sutherland-Hodgman), batched
+over every (part, cell) pair — no general overlay machinery needed
+(the reference leaned on JTS overlay-ng for robustness,
+spark/spark.py:104-107).
 """
 
 from __future__ import annotations
@@ -413,7 +414,9 @@ def is_finite_coords(rings: list[Coords]) -> bool:
 def repair(kind: str, rings: list[Coords]) -> tuple[str, list[Coords]] | None:
     """ST_MakeValid-lite (reference geospatial.py:140-166 repairs then
     drops still-invalid rows): close open rings, drop consecutive
-    duplicate vertices, reject degenerate/non-finite geometries."""
+    duplicate vertices, reject degenerate/non-finite geometries. A
+    hole that collapses below 3 distinct vertices encloses no area and
+    is dropped alone; a collapsed outer ring rejects the polygon."""
     if not is_finite_coords(rings):
         return None
     if kind == "point":
@@ -430,7 +433,9 @@ def repair(kind: str, rings: list[Coords]) -> tuple[str, list[Coords]] | None:
             r.append(r[0])
         r = _dedupe(r[:-1])
         if len(r) < 3:
-            return None
+            if not out:
+                return None
+            continue
         r.append(r[0])
         out.append(r)
     return (kind, out)
@@ -442,111 +447,3 @@ def _dedupe(pts: Coords) -> Coords:
         if p != out[-1]:
             out.append(p)
     return out
-
-
-# --- convex clipping (G4) -------------------------------------------------
-
-
-def clip_polygon_convex(subject: Coords, convex: Coords) -> Coords:
-    """Sutherland-Hodgman: clip an arbitrary simple polygon by a convex
-    polygon (the H3 hexagon). Rings are open (no repeated last point);
-    clip ring must be counter-clockwise."""
-    output = list(subject)
-    if _signed_area(convex) < 0:
-        convex = list(reversed(convex))
-    n = len(convex)
-    for i in range(n):
-        if not output:
-            return []
-        cp1 = convex[i]
-        cp2 = convex[(i + 1) % n]
-        input_pts = output
-        output = []
-        prev = input_pts[-1]
-        prev_in = _inside(prev, cp1, cp2)
-        for cur in input_pts:
-            cur_in = _inside(cur, cp1, cp2)
-            if cur_in:
-                if not prev_in:
-                    output.append(_intersect(prev, cur, cp1, cp2))
-                output.append(cur)
-            elif prev_in:
-                output.append(_intersect(prev, cur, cp1, cp2))
-            prev, prev_in = cur, cur_in
-    return output
-
-
-def _inside(p, a, b) -> bool:
-    return (b[0] - a[0]) * (p[1] - a[1]) - (b[1] - a[1]) * (p[0] - a[0]) >= 0.0
-
-
-def _intersect(p1, p2, a, b):
-    dx1, dy1 = p2[0] - p1[0], p2[1] - p1[1]
-    dx2, dy2 = b[0] - a[0], b[1] - a[1]
-    denom = dx1 * dy2 - dy1 * dx2
-    if denom == 0.0:
-        return p2
-    t = ((a[0] - p1[0]) * dy2 - (a[1] - p1[1]) * dx2) / denom
-    return (p1[0] + t * dx1, p1[1] + t * dy1)
-
-
-def _signed_area(pts: Coords) -> float:
-    s = 0.0
-    n = len(pts)
-    for i in range(n):
-        x1, y1 = pts[i]
-        x2, y2 = pts[(i + 1) % n]
-        s += x1 * y2 - x2 * y1
-    return s / 2.0
-
-
-def clip_line_convex(line: Coords, convex: Coords) -> list[Coords]:
-    """Clip a polyline to a convex polygon; returns the kept pieces.
-    Per-segment parametric (Cyrus-Beck style) interval clip."""
-    if _signed_area(convex) < 0:
-        convex = list(reversed(convex))
-    n = len(convex)
-    pieces: list[Coords] = []
-    cur: Coords = []
-    for p1, p2 in zip(line, line[1:]):
-        t0, t1 = 0.0, 1.0
-        dx, dy = p2[0] - p1[0], p2[1] - p1[1]
-        keep = True
-        for i in range(n):
-            a = convex[i]
-            b = convex[(i + 1) % n]
-            nx, ny = -(b[1] - a[1]), b[0] - a[0]  # inward normal (ccw)
-            denom = nx * dx + ny * dy
-            num = nx * (p1[0] - a[0]) + ny * (p1[1] - a[1])
-            if denom == 0.0:
-                if num < 0.0:
-                    keep = False
-                    break
-            else:
-                t = -num / denom
-                if denom > 0.0:  # entering
-                    t0 = max(t0, t)
-                else:  # leaving
-                    t1 = min(t1, t)
-                if t0 > t1:
-                    keep = False
-                    break
-        if not keep:
-            if cur:
-                pieces.append(cur)
-                cur = []
-            continue
-        q1 = (p1[0] + t0 * dx, p1[1] + t0 * dy)
-        q2 = (p1[0] + t1 * dx, p1[1] + t1 * dy)
-        if cur and cur[-1] == q1:
-            cur.append(q2)
-        else:
-            if cur:
-                pieces.append(cur)
-            cur = [q1, q2]
-        if t1 < 1.0:
-            pieces.append(cur)
-            cur = []
-    if cur:
-        pieces.append(cur)
-    return [p for p in pieces if len(p) >= 2]

@@ -4,11 +4,14 @@ and grid constants; no Sedona/h3-py dependency).
 
 Provides exactly the kernel surface the engine needs
 (SURVEY.md §2.6-2.7):
-- ``latlng_to_cell`` (U1 point path)
 - ``cell_to_parent`` (U2; also available as native Spark SQL bitops)
 - ``cell_to_boundary`` / ``cell_to_latlng`` (U3 hex geometry)
 - ``cell_area_km2`` (h3_area_km2 column)
-- ``polyfill`` + ``line_cells`` (U1 line/polygon paths)
+- U1 indexing runs on the batched numpy kernels: every point and line
+  or ring sample through ``vectorized.latlng_to_cell_batch``, polygon
+  interiors through ``coverage.polyfill_many``. The single-item
+  functions exported here (``latlng_to_cell``, ``line_cells``,
+  ``polyfill``) serve interactive and test use.
 """
 
 from h3_indexer_spark.functions.h3.core import (

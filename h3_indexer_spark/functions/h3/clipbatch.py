@@ -1,7 +1,9 @@
 """Vectorized (numpy) convex-clipping kernels for the Index stage.
 
-Batch twins of ``geometry.clip_polygon_convex`` / ``clip_line_convex``
-(same arithmetic, same intersection formulas) operating on padded
+Batched Sutherland-Hodgman and Cyrus-Beck clips (the scalar reference
+formulation, with the same arithmetic and intersection formulas, is
+``clip_polygon_convex`` / ``clip_line_convex`` in the tests-only
+oracle ``tests/scalar_oracle.py``) operating on padded
 (pair, vertex) arrays: every (geometry-part, candidate-cell) pair of an
 Arrow batch is clipped simultaneously instead of one Python call per
 pair. Only the clipped *measure* is returned (planar area for
@@ -100,7 +102,7 @@ def _clip_halfplane(pts, n, a, b, act):
             ) / denom
         ip = p1 + t[:, None] * d
         zero = denom == 0.0
-        if zero.any():  # matches scalar _intersect: parallel → p2
+        if zero.any():  # as the oracle's _intersect: parallel → p2
             ip[zero] = p2[zero]
         outp[rr, start[rr, cc]] = ip
     rr2, cc2 = np.nonzero(cur_m)
@@ -162,7 +164,7 @@ def clip_line_length_pairs(
 
     p1/p2: (R, 2) segment endpoints; cell_pts/(R, V, 2)/cell_nv the
     clip rings. Parametric interval clip (Cyrus-Beck), identical
-    arithmetic to geometry.clip_line_convex; the kept length is
+    arithmetic to the oracle's clip_line_convex; the kept length is
     (t1-t0)·|segment| so no clipped pieces are materialized.
     """
     R = p1.shape[0]

@@ -8,8 +8,10 @@
   produced — which is what makes the PCT_* ratios sum to 1.0 per
   feature (reference README.md:292,320).
 
-All pure Python over the core kernel; the Spark layer batches these in
-vectorized pandas UDFs.
+Each shape kind has one batched numpy kernel (line_sample_points +
+latlng_to_cell_batch, polyfill_many, cell_neighbors_batch); the
+single-shape functions (line_cells, polyfill) are one-item calls into
+them.
 """
 
 from __future__ import annotations
@@ -230,13 +232,15 @@ def _wrap_lng(lng: float) -> float:
 
 def line_sample_points(coords: list[tuple[float, float]], res: int):
     """Densified sample points along a polyline as (lats, lngs) numpy
-    arrays — the vectorizable half of line_cells. Step as in
-    line_cells (0.75 × edge < inradius; see there)."""
+    arrays, every segment stepped at 0.75 × edge length, which is less
+    than the hexagon inradius (0.87 e): consecutive samples land in the
+    same or an adjacent cell. A single vertex has no segment and gives
+    no samples."""
     import numpy as np
 
     step_deg = _EDGE_KM[res] / _EARTH_KM * (180.0 / math.pi) * 0.75
-    lats: list = []
-    lngs: list = []
+    lats: list = [np.empty(0)]
+    lngs: list = [np.empty(0)]
     for (x1, y1), (x2, y2) in zip(coords, coords[1:]):
         seg_len = math.hypot(x2 - x1, y2 - y1)
         n = max(1, int(math.ceil(seg_len / step_deg)))
@@ -252,28 +256,17 @@ def dedupe_cells(cells) -> list[int]:
 
 
 def line_cells(coords: list[tuple[float, float]], res: int) -> list[int]:
-    """Cells traversed by a polyline of (lng, lat) vertices: densify
-    each segment and index every sample. Unlike H3's gridLine
-    (cell-center path) this returns the cells the line geometrically
-    passes through.
+    """Cells traversed by a polyline of (lng, lat) vertices, in walk
+    order: every line_sample_points sample indexed in one batch call.
+    Unlike H3's gridLine (cell-center path) this returns the cells the
+    line geometrically passes through. A corner-cut cell the samples
+    skip is adjacent to a sampled cell, so callers complete coverage
+    with a 1-ring expansion and drop the extras by a zero clip ratio;
+    denser sampling would only re-find cells that expansion produces."""
+    from h3_indexer_spark.functions.h3.vectorized import latlng_to_cell_batch
 
-    Sampling step: 0.75 × edge length < the hexagon inradius (0.87 e),
-    so consecutive samples land in the same or an adjacent cell — any
-    corner-cut cell the samples skip is adjacent to a sampled cell, and
-    callers complete coverage with a 1-ring expansion
-    (udfs._expand_with_neighbors) + zero-ratio filter. Denser sampling
-    would only re-find cells the expansion already produces."""
-    step_deg = _EDGE_KM[res] / _EARTH_KM * (180.0 / math.pi) * 0.75
-    seen: dict[int, None] = {}
-    for (x1, y1), (x2, y2) in zip(coords, coords[1:]):
-        seg_len = math.hypot(x2 - x1, y2 - y1)
-        n = max(1, int(math.ceil(seg_len / step_deg)))
-        for t in range(n + 1):
-            f = t / n
-            cell = core.latlng_to_cell(y1 + f * (y2 - y1), x1 + f * (x2 - x1), res)
-            if cell:
-                seen[cell] = None
-    return list(seen)
+    lats, lngs = line_sample_points(coords, res)
+    return dedupe_cells(latlng_to_cell_batch(lats, lngs, res))
 
 
 def _point_in_ring(lng: float, lat: float, ring: list[tuple[float, float]]) -> bool:
@@ -298,65 +291,23 @@ def polyfill(
     include_boundary_cells: bool = True,
     boundary_cells: list[int] | None = None,
 ) -> list[int]:
-    """Cells covering a polygon given as a closed (lng, lat) ring.
+    """Cells covering one polygon given as a (lng, lat) ring, closure
+    optional: a one-spec ``polyfill_many`` call.
 
     Centers-in-polygon (H3 polyfill semantics) unioned with the
-    boundary-traversal cells (index_shape semantics — needed so
-    intersection ratios sum to 1). ``boundary_cells`` may be supplied
-    precomputed (the vectorized UDF layer batches them across
-    features).
-
-    Fully vectorized: candidate cells come from batch-indexing a
-    sub-inradius sample grid over the bbox; their centers are computed
-    in one batch and tested against the ring with a vector even-odd
-    test. (The previous BFS flood fill walked cell neighbors one at a
-    time — ~0.5 ms per cell; this path is ~40 µs per cell.)
+    boundary-traversal cells (index_shape semantics, needed so
+    intersection ratios sum to 1). ``boundary_cells`` defaults to the
+    ring's ``line_cells``. With ``include_boundary_cells=False`` only
+    the centers-in-polygon cells are returned: the sample grid alone
+    finds every cell whose center lies inside (see polyfill_many).
     """
-    import numpy as np
-
-    from h3_indexer_spark.functions.h3.vectorized import (
-        cell_to_latlng_batch,
-        latlng_to_cell_batch,
-    )
-
     if ring[0] == ring[-1]:
         ring = ring[:-1]
-    if boundary_cells is None:
+    if not include_boundary_cells:
+        boundary_cells = []
+    elif boundary_cells is None:
         boundary_cells = line_cells(ring + [ring[0]], res)
-
-    # candidate cells = every cell intersecting the bbox, found by
-    # batch-indexing a sample grid at 0.7 × mean edge. Guarantee: the
-    # measured minimum H3 cell inradius is 0.70 × mean edge (lat-
-    # corrected, res 4-9 global sample), and an axis-aligned grid of
-    # step s hits every region containing a disk of radius r when
-    # s ≤ r·√2 ≈ 0.99 × mean edge — so every bbox cell gets a sample
-    # with ~1.4× margin; anything pathological beyond that is adjacent
-    # to a found cell and recovered by the callers' 1-ring expansion
-    lngs = [p[0] for p in ring]
-    lats = [p[1] for p in ring]
-    step = _EDGE_KM[res] / _EARTH_KM * (180.0 / math.pi) * 0.7
-    glat = np.arange(min(lats), max(lats) + step, step)
-    glng = np.arange(min(lngs), max(lngs) + step, step)
-    cand_parts = [np.asarray(boundary_cells, dtype=np.int64)]
-    chunk_rows = max(1, int(2_000_000 / max(1, len(glng))))
-    for lo in range(0, len(glat), chunk_rows):
-        la, ln = np.meshgrid(glat[lo : lo + chunk_rows], glng, indexing="ij")
-        cand_parts.append(latlng_to_cell_batch(la.ravel(), ln.ravel(), res))
-    cand = np.unique(np.concatenate(cand_parts))
-    cand = cand[cand != 0]
-
-    clat, clng = cell_to_latlng_batch(cand)
-    inside = _points_in_ring_v(clng, clat, ring)
-    for hole in holes or []:
-        inside &= ~_points_in_ring_v(clng, clat, hole)
-
-    result: dict[int, None] = {}
-    if include_boundary_cells:
-        for c in boundary_cells:
-            result[c] = None
-    for c in cand[inside]:
-        result[int(c)] = None
-    return list(result)
+    return polyfill_many([(ring, holes, boundary_cells, False)], res)[0]
 
 
 def polyfill_many(specs, res: int) -> list:
@@ -367,9 +318,8 @@ def polyfill_many(specs, res: int) -> list:
     cells, and ``wrap`` True when the feature's coordinates were
     shifted to the [0, 360) frame (antimeridian crossers) — cell
     centers are then shifted into the same frame before the even-odd
-    test. Semantics per feature are identical to ``polyfill``; the
-    batching removes the per-call fixed cost that dominated when
-    thousands of small polygons were filled one at a time.
+    test. Each result lists the boundary cells, then every candidate
+    whose center lies inside the outer ring and outside the holes.
     """
     import numpy as np
 
@@ -378,6 +328,14 @@ def polyfill_many(specs, res: int) -> list:
         latlng_to_cell_batch,
     )
 
+    # candidate cells = every cell intersecting the bbox, found by
+    # batch-indexing a sample grid at 0.7 × mean edge. Guarantee: the
+    # measured minimum H3 cell inradius is 0.70 × mean edge (lat-
+    # corrected, res 4-9 global sample), and an axis-aligned grid of
+    # step s hits every region containing a disk of radius r when
+    # s ≤ r·√2 ≈ 0.99 × mean edge — so every bbox cell gets a sample
+    # with ~1.4× margin; anything pathological beyond that is adjacent
+    # to a found cell and recovered by the callers' 1-ring expansion
     step = _EDGE_KM[res] / _EARTH_KM * (180.0 / math.pi) * 0.7
     grid_la, grid_ln, gsizes = [], [], []
     rings_open = []

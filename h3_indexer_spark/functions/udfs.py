@@ -178,59 +178,6 @@ def canonical_wkt_udf(geom: pd.Series) -> pd.Series:
 # --- the indexing kernel: feature → (cell, ratio, metric) rows ------------
 
 
-def _index_point(rings, res: int, cell: int | None = None):
-    if cell is None:
-        (lng, lat) = rings[0][0]
-        cell = core.latlng_to_cell(lat, lng, res)
-    return [(cell, 1.0)], 1.0
-
-
-def _expand_with_neighbors(cells: list[int]) -> list[int]:
-    """Sampling-based coverage can miss a cell clipped at a tiny corner
-    (the classic grid-path corner cut); every such cell is adjacent to a
-    sampled one, so the sampled set ∪ its neighbors is a complete
-    candidate superset. Extras are filtered by a zero clip ratio."""
-    seen = dict.fromkeys(cells)
-    for c in cells:
-        for nb in coverage.cell_neighbors(c):
-            seen.setdefault(nb)
-    return list(seen)
-
-
-def _index_lines(lines, res: int, method: AllocationMethod, sampled=None):
-    """LINE allocation over one or more linestrings (a MULTILINESTRING
-    feature allocates across the union of its members): ratio =
-    clipped_length(cell) / total_length over ALL parts."""
-    if sampled is None:
-        sampled = [c for line in lines for c in coverage.line_cells(line, res)]
-        sampled = list(dict.fromkeys(sampled))
-    total_len = sum(geodesy.planar_line_length(line) for line in lines)
-    sampled_set = set(sampled)
-    out = []
-    for cell in _expand_with_neighbors(sampled):
-        is_sampled = cell in sampled_set
-        if method == AllocationMethod.PASS_THROUGH:
-            if is_sampled:
-                out.append((cell, 1.0))
-            continue
-        hexagon = list(_cell_boundary_ring(cell))
-        clipped = 0.0
-        for line in lines:
-            pieces = geometry.clip_line_convex(line, hexagon)
-            clipped += sum(geodesy.planar_line_length(p) for p in pieces)
-        ratio = clipped / total_len if total_len > 0 else 0.0
-        if ratio > 0.0 or is_sampled:
-            out.append((cell, ratio))
-    metric = (
-        sum(geodesy.spheroid_line_length_m(line) for line in lines) / 1000.0
-    )  # total_length_km
-    return out, metric
-
-
-def _index_line(rings, res: int, method: AllocationMethod, sampled=None):
-    return _index_lines([rings[0]], res, method, sampled)
-
-
 def _split_outer_holes(rings):
     outer = rings[0]
     holes = rings[1:]
@@ -302,72 +249,33 @@ def _area_centroid(parts):
     return cx, cy
 
 
-def _index_polygons(
-    polys, res: int, method: AllocationMethod, boundaries=None
-):
-    """POLYGON allocation over one or more polygons (a MULTIPOLYGON
-    feature allocates across the union of its members, assumed
-    disjoint): ratio = kept_area(cell) / total_area over ALL parts."""
-    parts = [_split_outer_holes(rings) for rings in polys]
-    metric = sum(
-        geodesy.spheroid_polygon_area_m2(outer)
-        - sum(geodesy.spheroid_polygon_area_m2(h) for h in holes)
-        for outer, holes in parts
-    ) / 1.0e6  # total_area_km2
-    if method == AllocationMethod.CENTROID:
-        cx, cy = _area_centroid(parts)
-        cell = core.latlng_to_cell(cy, cx, res)
-        return [(cell, 1.0)], metric
-    total_area = sum(
-        geodesy.planar_polygon_area(outer)
-        - sum(geodesy.planar_polygon_area(h) for h in holes)
-        for outer, holes in parts
-    )
-    if boundaries is None:
-        boundaries = [None] * len(parts)
-    cells: dict[int, None] = {}
-    for (outer, holes), boundary in zip(parts, boundaries):
-        for c in coverage.polyfill(
-            outer, res, holes=holes or None, boundary_cells=boundary
-        ):
-            cells.setdefault(c)
-    sampled = set(cells)
-    out = []
-    for cell in _expand_with_neighbors(list(cells)):
-        hexagon = list(_cell_boundary_ring(cell))
-        area = 0.0
-        for outer, holes in parts:
-            kept = geometry.clip_polygon_convex(outer, hexagon)
-            part_area = (
-                abs(geometry._signed_area(kept)) if len(kept) >= 3 else 0.0
-            )
-            for hole in holes:
-                kh = geometry.clip_polygon_convex(hole, hexagon)
-                if len(kh) >= 3:
-                    part_area -= abs(geometry._signed_area(kh))
-            area += part_area
-        ratio = area / total_area if total_area > 0 else 0.0
-        if ratio > 0.0 or cell in sampled:
-            out.append((cell, ratio))
-    return out, metric
-
-
-def _index_polygon(rings, res: int, method: AllocationMethod, boundary=None):
-    return _index_polygons(
-        [rings], res, method, [boundary] if boundary is not None else None
-    )
-
-
 # --- batched allocation: numpy over every (part, cell) pair of a batch ----
 #
-# The scalar allocators above clip one candidate cell at a time in
-# Python — the round-1 scale limiter (~7.2k polygons/s flat). The
-# functions below compute identical ratios for ALL features of an Arrow
-# batch at once: one exact-IJK neighbor expansion, one boundary batch,
-# and one vectorized Sutherland-Hodgman / Cyrus-Beck kernel call over
-# the stacked (part, cell) pairs, plus an interior fast path (cells not
-# within one ring of any boundary cell keep the full hexagon area
-# without clipping — O(perimeter) clip work instead of O(area)).
+# Each geometry kind has one batched allocator. Every sample point of an
+# Arrow batch (points, densified lines, every polygon ring, CENTROID
+# area centroids) is indexed in one latlng_to_cell_batch call; the
+# allocators then run one exact-IJK neighbor expansion, one boundary
+# batch, and one vectorized Sutherland-Hodgman / Cyrus-Beck kernel call
+# over the stacked (part, cell) pairs, plus an interior fast path
+# (cells not within one ring of any boundary cell keep the full hexagon
+# area without clipping — O(perimeter) clip work instead of O(area)).
+
+
+def _part_samples(kind, rings, res: int):
+    """Sample points of one parsed part as (lats, lngs) pairs, one per
+    ring: the point itself, the densified line, or every polygon ring
+    closed and densified (outer first, then holes)."""
+    import numpy as np
+
+    if kind == "point":
+        (lng, lat) = rings[0][0]
+        return [(np.asarray([lat]), np.asarray([lng]))]
+    if kind == "line":
+        return [coverage.line_sample_points(rings[0], res)]
+    return [
+        coverage.line_sample_points(r if r[0] == r[-1] else r + [r[0]], res)
+        for r in rings
+    ]
 
 
 def _maybe_unwrap(parts):
@@ -419,8 +327,9 @@ def _shift_wrapped(bpts, wrap_mask):
 def _grouped_neighbors(cell_lists):
     """One-ring expansion for many cell lists via a single batched
     exact-IJK neighbor call. Returns (expanded_lists, nbmap) where
-    expanded_lists[i] preserves _expand_with_neighbors order and nbmap
-    maps every input cell to its neighbor list."""
+    expanded_lists[i] is cell_lists[i] followed by its new neighbors in
+    first-seen order, and nbmap maps every input cell to its neighbor
+    list."""
     import numpy as np
 
     flat = [c for lst in cell_lists for c in lst]
@@ -443,9 +352,11 @@ def _grouped_neighbors(cell_lists):
 
 def _index_lines_batch(line_feats, res: int, method: AllocationMethod,
                        sample_cells):
-    """Batched LINE allocation for [(uid, plist, wrap)] features;
-    returns (uids, cells, ratios, metrics) row lists. Ratios are
-    identical to _index_lines (same clip arithmetic, vectorized)."""
+    """Batched LINE allocation for [(uid, plist, wrap)] features (a
+    MULTILINESTRING allocates across the union of its members): ratio =
+    clipped planar length(cell) / total planar length over ALL parts,
+    metric = total geodesic length in km. Returns (uids, cells, ratios,
+    metrics) row lists."""
     import numpy as np
 
     from h3_indexer_spark.functions.h3 import clipbatch
@@ -462,12 +373,12 @@ def _index_lines_batch(line_feats, res: int, method: AllocationMethod,
         sampled = list(
             dict.fromkeys(
                 c
-                for _, _, lo, hi in plist
+                for _, _, ((lo, hi),) in plist
                 for c in coverage.dedupe_cells(sample_cells[lo:hi])
             )
         )
         sampled_lists.append(sampled)
-        lines_f.append([rings[0] for _, rings, _, _ in plist])
+        lines_f.append([rings[0] for _, rings, _ in plist])
     # total_length_km metric: one batched Vincenty call over every
     # segment of the batch instead of per-segment scalar iteration
     seg_p1, seg_p2, seg_feat = [], [], []
@@ -562,17 +473,20 @@ def _index_lines_batch(line_feats, res: int, method: AllocationMethod,
 
 def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
                           sample_cells):
-    """Batched POLYGON allocation for [(uid, plist, wrap)] features
-    (non-CENTROID methods); returns (uids, cells, ratios, metrics).
+    """Batched POLYGON allocation for [(uid, plist, wrap)] features (a
+    MULTIPOLYGON allocates across the union of its members, assumed
+    disjoint); returns (uids, cells, ratios, metrics). The metric is
+    the total spheroid area in km², holes subtracted.
 
-    Candidate cells and ratios are identical to _index_polygons; the
-    coverage comes from one polyfill_many pass over every part of the
-    batch, the area of each (ring, cell) clip from the vectorized
-    kernel, and cells provably interior (in the polyfill set and not
-    within one ring of any outer/hole boundary cell — sampling
-    guarantees every boundary-crossed cell is within one ring of a
-    sampled one) skip clipping entirely and keep the full hexagon
-    area."""
+    CENTROID: one row per feature, the cell of the area centroid that
+    phase 1 sampled, with ratio 1. Otherwise ratio = kept planar
+    area(cell) / total planar area over ALL parts: the coverage comes
+    from one polyfill_many pass over every part of the batch, the area
+    of each (ring, cell) clip from the vectorized kernel, and cells
+    provably interior (in the polyfill set and not within one ring of
+    any outer/hole boundary cell — sampling guarantees every
+    boundary-crossed cell is within one ring of a sampled one) skip
+    clipping entirely and keep the full hexagon area."""
     import numpy as np
 
     from h3_indexer_spark.functions.h3 import clipbatch
@@ -583,53 +497,20 @@ def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
     ratios_out: list = []
     metrics_out: list = []
     F = len(poly_feats)
-
-    parts_f, total_area_f = [], []
-    metric_rings, metric_feat, metric_sign = [], [], []
-    edge_base_f = []  # outer sampled + hole boundary cells per feature
-    hole_cell_lists = []  # extra neighbor-batch inputs (holes only)
-    specs = []  # one polyfill spec per part
-    spec_feat = []  # owning feature of each spec
-    for fi, (_, plist, wrap) in enumerate(poly_feats):
-        parts = [_split_outer_holes(rings) for _, rings, _, _ in plist]
-        parts_f.append(parts)
-        for outer, holes in parts:
-            metric_rings.append(outer)
-            metric_feat.append(fi)
-            metric_sign.append(1.0)
-            for h in holes:
-                metric_rings.append(h)
-                metric_feat.append(fi)
-                metric_sign.append(-1.0)
-        total_area_f.append(
-            sum(
-                geodesy.planar_polygon_area(outer)
-                - sum(geodesy.planar_polygon_area(h) for h in holes)
-                for outer, holes in parts
-            )
-        )
-        boundaries = [
-            coverage.dedupe_cells(sample_cells[lo:hi]) if hi > lo else None
-            for _, _, lo, hi in plist
-        ]
-        edge_base: list[int] = []
-        hole_cells: list[int] = []
-        for (outer, holes), boundary in zip(parts, boundaries):
-            if boundary is None:
-                closed = outer + [outer[0]]
-                boundary = coverage.line_cells(closed, res)
-            specs.append((outer, holes or None, boundary, wrap))
-            spec_feat.append(fi)
-            edge_base.extend(boundary)
-            for hole in holes:
-                hc = coverage.line_cells(hole + [hole[0]], res)
-                edge_base.extend(hc)
-                hole_cells.extend(hc)
-        edge_base_f.append(edge_base)
-        hole_cell_lists.append(hole_cells)
+    parts_f = [
+        [_split_outer_holes(rings) for _, rings, _ in plist]
+        for _, plist, _ in poly_feats
+    ]
 
     # total_area_km2 metric: one batched authalic-area call over every
     # ring of the batch (holes subtract)
+    metric_rings, metric_feat, metric_sign = [], [], []
+    for fi, parts in enumerate(parts_f):
+        for outer, holes in parts:
+            for sign, ring in [(1.0, outer)] + [(-1.0, h) for h in holes]:
+                metric_rings.append(ring)
+                metric_feat.append(fi)
+                metric_sign.append(sign)
     metrics_arr = np.zeros(F, dtype=np.float64)
     if metric_rings:
         areas_m2 = geodesy.spheroid_polygon_area_m2_many(metric_rings)
@@ -640,7 +521,46 @@ def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
         )
     metrics_f = (metrics_arr / 1.0e6).tolist()
 
-    pf_lists: list[list[int]] = [[] for _ in range(F)]
+    if method == AllocationMethod.CENTROID:
+        for (uid, plist, _), metric in zip(poly_feats, metrics_f):
+            ((lo, _),) = plist[0][2]
+            cell = int(sample_cells[lo])
+            if cell:
+                uids_out.append(uid)
+                cells_out.append(cell)
+                ratios_out.append(1.0)
+                metrics_out.append(metric)
+        return uids_out, cells_out, ratios_out, metrics_out
+
+    total_area_f = []
+    edge_base_f = []  # outer + hole boundary cells per feature
+    hole_cell_lists = []  # extra neighbor-batch inputs (holes only)
+    specs = []  # one polyfill spec per part
+    spec_feat = []  # owning feature of each spec
+    for fi, (_, plist, wrap) in enumerate(poly_feats):
+        parts = parts_f[fi]
+        total_area_f.append(
+            sum(
+                geodesy.planar_polygon_area(outer)
+                - sum(geodesy.planar_polygon_area(h) for h in holes)
+                for outer, holes in parts
+            )
+        )
+        edge_base: list[int] = []
+        hole_cells: list[int] = []
+        for (outer, holes), (_, _, spans) in zip(parts, plist):
+            boundary, *hole_boundaries = [
+                coverage.dedupe_cells(sample_cells[lo:hi]) for lo, hi in spans
+            ]
+            specs.append((outer, holes or None, boundary, wrap))
+            spec_feat.append(fi)
+            edge_base.extend(boundary)
+            for hc in hole_boundaries:
+                edge_base.extend(hc)
+                hole_cells.extend(hc)
+        edge_base_f.append(edge_base)
+        hole_cell_lists.append(hole_cells)
+
     part_fills = coverage.polyfill_many(specs, res)
     merged: list[dict[int, None]] = [{} for _ in range(F)]
     for fi, fill in zip(spec_feat, part_fills):
@@ -826,9 +746,17 @@ def make_index_map_fn(
             # then index ALL samples in one vectorized call. Features
             # may be MULTI* — each member becomes a part; allocation
             # ratios are computed across the union of a feature's parts.
-            feats = []  # (uid, [(kind, rings, lo, hi), ...], wrap)
+            # A part's spans are the sample ranges of its rings.
+            feats = []  # (uid, [(kind, rings, spans), ...], wrap)
             lat_parts, lng_parts = [], []
-            offset = 0
+            bounds = [0]
+
+            def span(la, ln):
+                lat_parts.append(la)
+                lng_parts.append(ln)
+                bounds.append(bounds[-1] + len(la))
+                return bounds[-2], bounds[-1]
+
             for uid, wkt in zip(pdf[uid_col], pdf[GEOM_WKT]):
                 if wkt is None:
                     continue
@@ -837,31 +765,22 @@ def make_index_map_fn(
                 except geometry.GeometryError:
                     continue
                 parts, wrap = _maybe_unwrap(parts)
-                plist = []
-                for kind, rings in parts:
-                    if kind == "point":
-                        (lng, lat) = rings[0][0]
-                        lat_parts.append(np.asarray([lat]))
-                        lng_parts.append(np.asarray([lng]))
-                        n = 1
-                    elif kind == "line":
-                        la, ln = coverage.line_sample_points(rings[0], res)
-                        lat_parts.append(la)
-                        lng_parts.append(ln)
-                        n = len(la)
-                    elif method == AllocationMethod.CENTROID:
-                        n = 0  # centroid cell computed scalar in phase 2
-                    else:
-                        ring = rings[0]
-                        closed = (
-                            ring if ring[0] == ring[-1] else ring + [ring[0]]
-                        )
-                        la, ln = coverage.line_sample_points(closed, res)
-                        lat_parts.append(la)
-                        lng_parts.append(ln)
-                        n = len(la)
-                    plist.append((kind, rings, offset, offset + n))
-                    offset += n
+                if (
+                    method == AllocationMethod.CENTROID
+                    and parts[0][0] == "polygon"
+                ):
+                    # the feature's one sample, shared by its parts
+                    cx, cy = _area_centroid(
+                        [_split_outer_holes(rings) for _, rings in parts]
+                    )
+                    spans = [span(np.asarray([cy]), np.asarray([cx]))]
+                    plist = [(kind, rings, spans) for kind, rings in parts]
+                else:
+                    plist = [
+                        (kind, rings, [span(*sample) for sample in
+                                       _part_samples(kind, rings, res)])
+                        for kind, rings in parts
+                    ]
                 feats.append((uid, plist, wrap))
             sample_cells = (
                 latlng_to_cell_batch(
@@ -872,19 +791,17 @@ def make_index_map_fn(
             )
 
             # phase 2: batched geometry work on the precomputed cells.
-            # Line and polygon features route to the numpy pair kernels
-            # (_index_lines_batch/_index_polygons_batch); points and
-            # CENTROID polygons stay scalar (no clipping involved).
+            # Points read their cells directly; line and polygon
+            # features (CENTROID polygons included) go to the numpy
+            # allocators _index_lines_batch/_index_polygons_batch.
             uids, cells, ratios, metrics = [], [], [], []
             line_feats, poly_feats = [], []
-            for uid, plist, wrap in feats:
-                kinds = {k for k, _, _, _ in plist}
-                if len(kinds) != 1:
-                    continue  # mixed-kind collections are not allocatable
-                kind = next(iter(kinds))
+            for feat in feats:
+                uid, plist, _ = feat
+                kind = plist[0][0]  # parse_wkt_parts: one kind per feature
                 if kind == "point":
                     seen = dict.fromkeys(
-                        int(sample_cells[lo]) for _, _, lo, _ in plist
+                        int(sample_cells[spans[0][0]]) for _, _, spans in plist
                     )
                     for cell in seen:
                         if cell:
@@ -893,19 +810,9 @@ def make_index_map_fn(
                             ratios.append(1.0)
                             metrics.append(1.0)
                 elif kind == "line":
-                    line_feats.append((uid, plist, wrap))
-                elif method == AllocationMethod.CENTROID:
-                    pairs, metric = _index_polygons(
-                        [rings for _, rings, _, _ in plist], res, method
-                    )
-                    for cell, ratio in pairs:
-                        if cell:
-                            uids.append(uid)
-                            cells.append(cell)
-                            ratios.append(ratio)
-                            metrics.append(metric)
+                    line_feats.append(feat)
                 else:
-                    poly_feats.append((uid, plist, wrap))
+                    poly_feats.append(feat)
             if line_feats:
                 u2, c2, r2, m2 = _index_lines_batch(
                     line_feats, res, method, sample_cells

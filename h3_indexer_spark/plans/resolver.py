@@ -77,29 +77,18 @@ def _finalize(resolved: DataFrame, h3_resolution: int) -> DataFrame:
 
 
 def h3_resolver_spark(spark: SparkSession, job: Job) -> DataFrame:
-    """Multi-input resolve: per-input aggregation then full-outer
-    alignment on h3_index (J3, reference h3_resolver.py:45-98)."""
+    """Resolve: per-input aggregation then full-outer alignment on
+    h3_index (J3, reference h3_resolver.py:45-98). One input aligns to
+    itself, so the reference's single-input shortcut
+    (h3_resolver.py:101-160) is this same plan."""
     per_input = [resolve_input(vt) for vt in job.inputs.values()]
     aligned = full_outer_align(per_input, H3_INDEX)
     return repartition_by(_finalize(aligned, job.h3_resolution), H3_R3_PARENT)
 
 
-def h3_resolver_single_input_spark(spark: SparkSession, job: Job) -> DataFrame:
-    """Single-input shortcut (reference h3_resolver.py:101-160) — same
-    plan minus the outer-join chain."""
-    (vt,) = job.inputs.values()
-    return repartition_by(
-        _finalize(resolve_input(vt), job.h3_resolution), H3_R3_PARENT
-    )
-
-
 def resolve_job(job: Job, spark: SparkSession) -> Job:
     """Resolve stage driver (reference main.py:69-98)."""
     job.update_status(JobStatus.RUNNING_RESOLVER)
-    if len(job.inputs) == 1:
-        df = h3_resolver_single_input_spark(spark, job)
-    else:
-        df = h3_resolver_spark(spark, job)
-    job.set_h3_resolved_df(df.persist())
+    job.set_h3_resolved_df(h3_resolver_spark(spark, job).persist())
     job.update_status(JobStatus.COMPLETED_RESOLVER)
     return job

@@ -145,11 +145,14 @@ def validate_input(
 
 def validate_config(job: Job, spark: SparkSession) -> Job:
     """Validate every input; status → VALIDATED (reference
-    validator.py:64-115)."""
+    validator.py:64-115). When an input fails, the frames already
+    persisted for earlier inputs are released before the error
+    propagates."""
     try:
         for name, vt in job.inputs.items():
             validate_input(spark, vt, name)
     except ValidationError:
+        job.release()
         job.update_status(JobStatus.FAILED, error="validation failed")
         raise
     job.update_status(JobStatus.VALIDATED)

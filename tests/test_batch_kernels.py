@@ -1,10 +1,11 @@
 """Batch-kernel ↔ scalar-kernel equivalence locks (seeded random).
 
-The round-2 numpy pair kernels (clipbatch), batched boundaries/
-neighbors (vectorized/coverage), and batched geodesy must keep
-producing what their scalar twins produce; these tests freeze the
-agreements measured during the rework so a refactor cannot silently
-drift. No Spark session needed."""
+The numpy pair kernels (clipbatch), batched boundaries/neighbors
+(vectorized/coverage), batched geodesy and the batched allocators must
+keep producing what the scalar formulations produce — the program's
+scalar H3 kernels and the tests-only oracle in tests/scalar_oracle.py;
+these tests freeze the agreements measured during the rework so a
+refactor cannot silently drift. No Spark session needed."""
 
 from __future__ import annotations
 
@@ -26,8 +27,8 @@ def _rand_hex(rng, cx, cy, r):
 
 class TestClipKernels:
     def test_polygon_area_pairs_match_scalar(self):
-        from h3_indexer_spark.functions import geometry
         from h3_indexer_spark.functions.h3 import clipbatch
+        from tests import scalar_oracle
 
         rng = random.Random(7)
         subj, hexes = [], []
@@ -55,14 +56,14 @@ class TestClipKernels:
             H[i] = h
         got = clipbatch.clip_polygon_area_pairs(P, pn, H, hn)
         for i, (s, h) in enumerate(zip(subj, hexes)):
-            kept = geometry.clip_polygon_convex(s, h)
-            exp = (abs(geometry._signed_area(kept))
+            kept = scalar_oracle.clip_polygon_convex(s, h)
+            exp = (abs(scalar_oracle.signed_area(kept))
                    if len(kept) >= 3 else 0.0)
             assert got[i] == pytest.approx(exp, rel=1e-9, abs=1e-12)
 
     def test_line_length_pairs_match_scalar(self):
-        from h3_indexer_spark.functions import geodesy, geometry
         from h3_indexer_spark.functions.h3 import clipbatch
+        from tests import scalar_oracle
 
         rng = random.Random(9)
         p1s, p2s, hexes = [], [], []
@@ -79,8 +80,10 @@ class TestClipKernels:
             np.asarray(p1s), np.asarray(p2s), H, hn
         )
         for i in range(len(p1s)):
-            pieces = geometry.clip_line_convex([p1s[i], p2s[i]], hexes[i])
-            exp = sum(geodesy.planar_line_length(p) for p in pieces)
+            pieces = scalar_oracle.clip_line_convex(
+                [p1s[i], p2s[i]], hexes[i]
+            )
+            exp = sum(scalar_oracle.planar_line_length(p) for p in pieces)
             assert got[i] == pytest.approx(exp, rel=1e-9, abs=1e-12)
 
 
@@ -171,6 +174,7 @@ class TestBatchedH3:
 class TestBatchedGeodesy:
     def test_vincenty_batch_matches_scalar(self):
         from h3_indexer_spark.functions import geodesy
+        from tests import scalar_oracle
 
         rng = random.Random(3)
         lat1 = np.asarray([rng.uniform(-80, 80) for _ in range(500)])
@@ -180,7 +184,7 @@ class TestBatchedGeodesy:
         got = geodesy.vincenty_distance_m_batch(lat1, lng1, lat2, lng2)
         for a, b, c, d, g in zip(lat1, lng1, lat2, lng2, got):
             assert g == pytest.approx(
-                geodesy.vincenty_distance_m(a, b, c, d), abs=1e-4
+                scalar_oracle.vincenty_distance_m(a, b, c, d), abs=1e-4
             )
         # degenerate: identical points
         z = geodesy.vincenty_distance_m_batch(
@@ -217,6 +221,7 @@ class TestBatchAllocatorsMatchScalar:
         from h3_indexer_spark.functions.h3.vectorized import (
             latlng_to_cell_batch,
         )
+        from tests import scalar_oracle
 
         rng = random.Random(11)
         res = 6
@@ -232,13 +237,13 @@ class TestBatchAllocatorsMatchScalar:
             ]
             rings = [outer + [outer[0]]]
             sampled = coverage.line_cells(outer + [outer[0]], res)
-            pairs, metric = udfs._index_polygons(
+            pairs, metric = scalar_oracle.index_polygons(
                 [rings], res, AllocationMethod.PCT_AREA,
                 boundaries=[sampled],
             )
             la, ln = coverage.line_sample_points(outer + [outer[0]], res)
             sc = latlng_to_cell_batch(la, ln, res)
-            plist = [("polygon", rings, 0, len(sc))]
+            plist = [("polygon", rings, [(0, len(sc))])]
             _, c, r, m = udfs._index_polygons_batch(
                 [(1, plist, False)], res, AllocationMethod.PCT_AREA, sc
             )
@@ -255,6 +260,7 @@ class TestBatchAllocatorsMatchScalar:
         from h3_indexer_spark.functions.h3.vectorized import (
             latlng_to_cell_batch,
         )
+        from tests import scalar_oracle
 
         rng = random.Random(13)
         res = 4
@@ -264,12 +270,12 @@ class TestBatchAllocatorsMatchScalar:
                 line.append((line[-1][0] + rng.uniform(-0.5, 0.5),
                              line[-1][1] + rng.uniform(-0.5, 0.5)))
             sampled = coverage.line_cells(line, res)
-            pairs, metric = udfs._index_lines(
+            pairs, metric = scalar_oracle.index_lines(
                 [line], res, AllocationMethod.PCT_LENGTH, sampled=sampled
             )
             la, ln = coverage.line_sample_points(line, res)
             sc = latlng_to_cell_batch(la, ln, res)
-            plist = [("line", [line], 0, len(sc))]
+            plist = [("line", [line], [(0, len(sc))])]
             _, c, r, m = udfs._index_lines_batch(
                 [(1, plist, False)], res, AllocationMethod.PCT_LENGTH, sc
             )
@@ -278,3 +284,75 @@ class TestBatchAllocatorsMatchScalar:
             for cc in exp:
                 assert got[cc] == pytest.approx(exp[cc], abs=1e-9)
             assert m[0] == pytest.approx(metric, rel=1e-6)
+
+
+class TestOneAllocationPath:
+    """The Index map function allocates every geometry kind through
+    the batched kernels alone: with the scalar H3 kernels made to
+    raise, one batch of lines, holed polygons and a MULTIPOLYGON still
+    indexes, by PCT_AREA and by CENTROID, with Σratio = 1 per
+    feature. All features sit far from the 12 pentagons."""
+
+    WKTS = [
+        "LINESTRING (-100 40, -99.6 40.3, -99.2 40.1)",
+        "MULTILINESTRING ((-98 38, -97.7 38.2), (-97.5 38.4, -97.2 38.1))",
+        # two holes
+        "POLYGON ((-100 42, -99.5 42, -99.5 42.4, -100 42.4, -100 42), "
+        "(-99.9 42.1, -99.8 42.1, -99.8 42.2, -99.9 42.2, -99.9 42.1), "
+        "(-99.7 42.2, -99.6 42.2, -99.6 42.3, -99.7 42.2))",
+        "MULTIPOLYGON (((-90 35, -89.7 35, -89.7 35.3, -90 35.3, -90 35)), "
+        "((-89.5 35, -89.3 35, -89.3 35.2, -89.5 35), "
+        "(-89.45 35.02, -89.4 35.02, -89.4 35.06, -89.45 35.02)))",
+        "POLYGON ((-80 30, -79.6 30.1, -79.8 30.4, -80 30))",
+    ]
+    POLYGON_IDS = [2, 3, 4]
+
+    def _index(self, monkeypatch, method):
+        import pandas as pd
+
+        from h3_indexer_spark.config.vector import GeometryType
+        from h3_indexer_spark.functions.h3 import core, coverage
+        from h3_indexer_spark.functions.udfs import make_index_map_fn
+
+        def scalar_kernel(*args, **kwargs):
+            raise AssertionError("scalar H3 kernel called")
+
+        # building the map function derives the H3 tables (a one-time
+        # scalar pass) before the scalar kernels are made to raise
+        fn = make_index_map_fn(
+            "id", GeometryType.POLYGON, method, 6, "metric"
+        )
+        for module, name in [
+            (core, "latlng_to_cell"),
+            (coverage, "line_cells"),
+            (coverage, "polyfill"),
+            (coverage, "cell_neighbors"),
+        ]:
+            monkeypatch.setattr(module, name, scalar_kernel)
+        pdf = pd.DataFrame(
+            {"id": range(len(self.WKTS)), "geom_wkt": self.WKTS}
+        )
+        out = pd.concat(list(fn(iter([pdf]))))
+        sums = out.groupby("id")["ratio"].sum()
+        assert sums.index.tolist() == list(range(len(self.WKTS)))
+        assert (sums - 1.0).abs().max() < 1e-9
+        return out
+
+    def test_pct_area_batch_uses_no_scalar_kernel(self, monkeypatch):
+        from h3_indexer_spark.config.vector import AllocationMethod
+
+        out = self._index(monkeypatch, AllocationMethod.PCT_AREA)
+        assert (out.groupby("id").size() > 1).all()
+
+    def test_centroid_batch_uses_no_scalar_kernel(self, monkeypatch):
+        from h3_indexer_spark.config.vector import AllocationMethod
+
+        out = self._index(monkeypatch, AllocationMethod.CENTROID)
+        polys = out[out.id.isin(self.POLYGON_IDS)]
+        assert polys.groupby("id").size().tolist() == [1, 1, 1]
+        # CENTROID reports the same total_area_km2 as PCT_AREA
+        area = self._index(monkeypatch, AllocationMethod.PCT_AREA)
+        expect = area.groupby("id")["metric"].first()
+        for uid, metric in zip(polys.id, polys.metric):
+            assert metric == expect[uid]
+

@@ -97,6 +97,40 @@ class TestCanonicalUdf:
         assert out[0].w is not None and out[0].w.startswith("MULTIPOLYGON")
 
 
+    def test_degenerate_hole_dropped_alone(self):
+        """A hole that collapses to one repeated vertex encloses no
+        area: repair drops that hole and keeps the polygon, so the row
+        and its attribute mass survive validation and index in full."""
+        import pandas as pd
+
+        from h3_indexer_spark.config.vector import (
+            AllocationMethod,
+            GeometryType,
+        )
+        from h3_indexer_spark.functions.udfs import (
+            canonical_wkt_udf,
+            make_index_map_fn,
+        )
+
+        wkt = ("POLYGON ((0 0, 1 0, 1 1, 0 0), "
+               "(0.1 0.1, 0.1 0.1, 0.1 0.1, 0.1 0.1))")
+        (canon,) = canonical_wkt_udf.func(pd.Series([wkt]))
+        assert canon == "POLYGON ((0.0 0.0, 1.0 0.0, 1.0 1.0, 0.0 0.0))"
+        fn = make_index_map_fn(
+            "id", GeometryType.POLYGON, AllocationMethod.PCT_AREA, 6,
+            "total_area_km2",
+        )
+        (out,) = fn(iter([pd.DataFrame({"id": [1], "geom_wkt": [canon]})]))
+        assert len(out) > 0
+        assert abs(out.ratio.sum() - 1.0) < 1e-9
+        # a collapsed OUTER ring still rejects the feature
+        collapsed_outer = ("POLYGON ((0 0, 0 0, 0 0, 0 0), "
+                           "(0.1 0.1, 0.2 0.1, 0.2 0.2, 0.1 0.1))")
+        assert canonical_wkt_udf.func(
+            pd.Series([collapsed_outer])
+        ).tolist() == [None]
+
+
 class TestPipelineEndToEnd:
     def test_multipolygon_through_three_stages(self, spark, tmp_path):
         """validate → index → resolve on a MULTIPOLYGON input: rows

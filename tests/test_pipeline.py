@@ -127,6 +127,57 @@ class TestValidate:
         assert kept > total * 0.9
 
 
+class TestJobRelease:
+    """The program owns the life cycle of what it caches: a released
+    job leaves no persisted frame behind, and a failed validation
+    releases the inputs it had already persisted."""
+
+    @staticmethod
+    def _persistent_rdds(spark):
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    @pytest.fixture(autouse=True)
+    def _empty_cache(self, spark):
+        # earlier tests keep frames cached; a job whose plan matches one
+        # of them would share (and release) that cache entry
+        spark.catalog.clearCache()
+
+    def test_persistent_rdds_flat_over_job_loop(self, spark, fixture_dir):
+        base = self._persistent_rdds(spark)
+        for _ in range(10):
+            job = _job(fixture_dir, {"pts": _points_input(fixture_dir)})
+            validate_config(job, spark)
+            index_job(job, spark)
+            resolve_job(job, spark)
+            assert job.h3_resolved_df.count() > 0
+            assert self._persistent_rdds(spark) > base
+            job.release()
+            assert self._persistent_rdds(spark) == base
+
+    def test_failed_validation_releases_earlier_inputs(
+        self, spark, fixture_dir
+    ):
+        good = dict(
+            type="vector",
+            path=str(fixture_dir / "geo_points_wkt.parquet"),
+            unique_id="point_id",
+            geometry_type="POINT",
+            method="WITHIN",
+            geometry_column_name="geometry",
+            input_columns=["value"],
+        )
+        bad = _points_input(fixture_dir)
+        bad["path"] = str(fixture_dir / "geo_points_bad_pk.parquet")
+        base = self._persistent_rdds(spark)
+        job = _job(fixture_dir, {"good": good, "bad": bad})
+        with pytest.raises(ValidationError, match="not unique"):
+            validate_config(job, spark)
+        assert job.status is JobStatus.FAILED
+        assert self._persistent_rdds(spark) == base
+        level = job.inputs["good"].df.storageLevel
+        assert not (level.useMemory or level.useDisk)
+
+
 class TestIndexPoints:
     def test_within_invariants(self, spark, fixture_dir):
         job = _job(fixture_dir, {"pts": _points_input(fixture_dir)})
@@ -288,8 +339,6 @@ class TestExtendedMethods:
         """A rectangle with one vertex-dense edge: the vertex mean is
         dragged toward the dense edge, the area centroid is the exact
         rectangle center. The CENTROID cell must be the center's."""
-        from h3_indexer_spark.config.vector import AllocationMethod
-        from h3_indexer_spark.functions import udfs
         from h3_indexer_spark.functions.h3 import core
 
         res = 9
@@ -297,11 +346,8 @@ class TestExtendedMethods:
         # left edge densified with 200 extra vertices
         dense = [(x0, y0 + (y1 - y0) * i / 200.0) for i in range(201)]
         ring = dense + [(x1, y1), (x1, y0), (x0, y0)]
-        pairs, _ = udfs._index_polygons(
-            [[ring]], res, AllocationMethod.CENTROID
-        )
         expected = core.latlng_to_cell((y0 + y1) / 2, (x0 + x1) / 2, res)
-        assert pairs == [(expected, 1.0)]
+        assert _centroid_rows([[ring]], res) == [(expected, 1.0)]
         # sanity: the vertex mean would land in a different cell
         mx = sum(x for x, _ in ring) / len(ring)
         my = sum(y for _, y in ring) / len(ring)
@@ -310,8 +356,6 @@ class TestExtendedMethods:
     def test_centroid_concave_polygon(self):
         """L-shaped polygon: area centroid is analytically known
         (weighted mean of the two constituent rectangles)."""
-        from h3_indexer_spark.config.vector import AllocationMethod
-        from h3_indexer_spark.functions import udfs
         from h3_indexer_spark.functions.h3 import core
 
         res = 9
@@ -324,17 +368,14 @@ class TestExtendedMethods:
         # analytic: A1=3 (center 1.5,0.5), A2=2 (center 0.5,2.0)
         cx = ox + s * (3 * 1.5 + 2 * 0.5) / 5
         cy = oy + s * (3 * 0.5 + 2 * 2.0) / 5
-        pairs, _ = udfs._index_polygons(
-            [[ring]], res, AllocationMethod.CENTROID
-        )
-        assert pairs == [(core.latlng_to_cell(cy, cx, res), 1.0)]
+        assert _centroid_rows([[ring]], res) == [
+            (core.latlng_to_cell(cy, cx, res), 1.0)
+        ]
 
     def test_centroid_multipolygon_snaps_to_largest_part(self):
         """Two disjoint parts: the combined centroid falls in the gap
         between them, so allocation snaps to the largest part's own
         centroid instead of a cell touching neither part."""
-        from h3_indexer_spark.config.vector import AllocationMethod
-        from h3_indexer_spark.functions import udfs
         from h3_indexer_spark.functions.h3 import core
 
         res = 9
@@ -344,17 +385,12 @@ class TestExtendedMethods:
 
         big = square(-100.0, 40.0, 0.1)
         small = square(-99.5, 40.0, 0.05)
-        pairs, _ = udfs._index_polygons(
-            [[big], [small]], res, AllocationMethod.CENTROID
-        )
         expected = core.latlng_to_cell(40.05, -99.95, res)  # big center
-        assert pairs == [(expected, 1.0)]
+        assert _centroid_rows([[big], [small]], res) == [(expected, 1.0)]
 
     def test_centroid_with_hole(self):
         """An off-center hole shifts the area centroid away from the
         hole (vertex mean of the outer ring would not move at all)."""
-        from h3_indexer_spark.config.vector import AllocationMethod
-        from h3_indexer_spark.functions import udfs
         from h3_indexer_spark.functions.h3 import core
 
         res = 9
@@ -367,10 +403,32 @@ class TestExtendedMethods:
         # 0.0048 c=(−99.95, 40.1) → cx = (0.04·−99.9 − 0.0048·−99.95)
         # / (0.04 − 0.0048)
         cx = (0.04 * -99.9 - 0.0048 * -99.95) / (0.04 - 0.0048)
-        pairs, _ = udfs._index_polygons(
-            [[outer, hole]], res, AllocationMethod.CENTROID
-        )
-        assert pairs == [(core.latlng_to_cell(40.1, cx, res), 1.0)]
+        assert _centroid_rows([[outer, hole]], res) == [
+            (core.latlng_to_cell(40.1, cx, res), 1.0)
+        ]
+
+
+def _centroid_rows(polys, res):
+    """(cell, ratio) rows of one CENTROID feature — a (multi)polygon
+    given as a list of ring lists — from the Index map function run on
+    a one-row batch, with no Spark session."""
+    import pandas as pd
+
+    from h3_indexer_spark.config.vector import AllocationMethod, GeometryType
+    from h3_indexer_spark.constants import GEOM_WKT, H3_INDEX, RATIO
+    from h3_indexer_spark.functions import geometry
+    from h3_indexer_spark.functions.h3 import core
+    from h3_indexer_spark.functions.udfs import make_index_map_fn
+
+    wkt = geometry.parts_to_wkt([("polygon", rings) for rings in polys])
+    fn = make_index_map_fn(
+        "id", GeometryType.POLYGON, AllocationMethod.CENTROID, res,
+        "total_area_km2",
+    )
+    (out,) = fn(iter([pd.DataFrame({"id": [1], GEOM_WKT: [wkt]})]))
+    return [
+        (core.string_to_h3(c), r) for c, r in zip(out[H3_INDEX], out[RATIO])
+    ]
 
 
 class TestReferenceNotebookGolden:
